@@ -1,10 +1,12 @@
 """Real Delta Lake implementation of :class:`~odbc2deltalake_spark.tablestore.TableStore`.
 
-A thin pass-through to ``delta-spark``'s ``DeltaTable`` API, so the engine
-can write standard Delta tables — readable by duckdb's delta extension,
-delta-rs, and any other Spark — exactly the output format of the reference
+A thin pass-through to ``delta-spark``'s ``DeltaTable`` API that writes
+standard Delta tables, the reference's output format
 (reference:odbc2deltalake/reader/spark_reader.py:144-162 writes
-``format("delta")``; 329-350 merges via ``DeltaTable.merge``).
+``format("delta")``; 329-350 merges via ``DeltaTable.merge``). It is a
+standalone store: the load engine (plans/destination.py) always uses
+:class:`~odbc2deltalake_spark.tablestore.VersionedParquetTable` and never
+calls this class.
 
 Import-gated: ``delta-spark`` is not present in this build environment, so
 the class raises ``ImportError`` at construction when the package is
@@ -334,9 +336,7 @@ class DeltaTableStore(TableStore):
         (patch/mask chain lengths, commit-dir sizes, checkpoint lag) are
         parquet-store metadata. The Delta equivalents are OPTIMIZE +
         checkpoints the Delta runtime manages itself + VACUUM, which
-        callers invoke directly (the lifecycle's maintain_side_tables
-        falls back to plain vacuum() on this store for exactly this
-        reason)."""
+        callers invoke directly."""
         raise NotImplementedError(
             "DeltaTableStore: run OPTIMIZE / VACUUM via the Delta "
             "runtime; auto_maintain's fold/compact/checkpoint window is "

@@ -162,10 +162,16 @@ def _fit_logreg_driver(
     precision over <= cap addends, within ~1e-12 of any summation
     order; the repo pins fit_logreg against the independently-ordered
     numpy reference_fit at 1e-9, so summation-order robustness at this
-    tolerance is an existing, tested property of the fit)."""
+    tolerance is an existing, tested property of the fit).
+
+    A row with NULL ``feats`` contributes no gradient term but still
+    counts in ``n``, as in the loop, where explode drops it."""
     import numpy as np
 
     d = n_buckets + 3
+    rows = [r for r in rows if r["feats"] is not None]
+    if not rows:
+        return [0.0] * d
     row_idx = np.concatenate(
         [np.full(len(r["feats"]), i, dtype=np.int64) for i, r in enumerate(rows)]
     )

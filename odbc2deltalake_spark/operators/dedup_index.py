@@ -38,6 +38,7 @@ from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import Window as W
 from pyspark.sql import functions as F
 
+from odbc2deltalake_spark.functions.overlap import overlap
 from odbc2deltalake_spark.tablestore import VersionedParquetTable
 
 N_HASHES = 8
@@ -119,19 +120,13 @@ class DedupIndex:
         # both read the eagerly checkpointed signatures — write them
         # concurrently; crash states equal the sequential torn pairs
         # check_consistent() already detects
-        from concurrent.futures import ThreadPoolExecutor
-
         sigs = signature_df(docs).localCheckpoint(eager=True)
-        with ThreadPoolExecutor(max_workers=2) as pool:
-            f_sigs = pool.submit(self.sigs.write, sigs, mode="overwrite")
-            f_bands = pool.submit(
-                self.bands.write,
-                band_df(sigs),
-                mode="overwrite",
-                partition_by=["band"],
-            )
-            version = f_bands.result()
-            f_sigs.result()
+        _, version = overlap(
+            lambda: self.sigs.write(sigs, mode="overwrite"),
+            lambda: self.bands.write(
+                band_df(sigs), mode="overwrite", partition_by=["band"]
+            ),
+        )
         return version
 
     def append_and_find_pairs(
@@ -202,18 +197,12 @@ class DedupIndex:
         # concurrently; the documented skew window (crash between the
         # two commits, reconciled by re-run / check_consistent) is
         # unchanged in kind, only its ordering is no longer fixed
-        from concurrent.futures import ThreadPoolExecutor
-
-        with ThreadPoolExecutor(max_workers=2) as pool:
-            f_s = pool.submit(self.sigs.write, new_sigs, mode="append")
-            f_b = pool.submit(
-                self.bands.write,
-                new_bands,
-                mode="append",
-                partition_by=["band"],
-            )
-            f_s.result()
-            f_b.result()
+        overlap(
+            lambda: self.sigs.write(new_sigs, mode="append"),
+            lambda: self.bands.write(
+                new_bands, mode="append", partition_by=["band"]
+            ),
+        )
         return pairs
 
     def check_consistent(self, spark: SparkSession) -> bool:

@@ -38,6 +38,7 @@ from odbc2deltalake_spark.functions.projection import (
     tombstone_projection,
     with_system_cols,
 )
+from odbc2deltalake_spark.functions.overlap import overlap
 from odbc2deltalake_spark.metadata import SYS, ColInfo, resolve_type
 from odbc2deltalake_spark.operators.scd2 import (
     deletes_keys,
@@ -386,15 +387,10 @@ def do_delta_load(ctx: _Ctx, simple: bool = False, simple_check: bool = False) -
     # job's tasks back-fill the first's tail (guide §2.6; on a cluster
     # the source probe is remote-RDBMS latency the local job need not
     # wait behind)
-    from concurrent.futures import ThreadPoolExecutor
-
-    with ThreadPoolExecutor(max_workers=2) as pool:
-        f_local = pool.submit(_local_value_and_count, ctx)
-        f_src = pool.submit(
-            ctx.source.max_and_count, ctx.spark, _source_delta_name(ctx)
-        )
-        wm, local_count = f_local.result()
-        src_wm, src_count = f_src.result()
+    (wm, local_count), (src_wm, src_count) = overlap(
+        lambda: _local_value_and_count(ctx),
+        lambda: ctx.source.max_and_count(ctx.spark, _source_delta_name(ctx)),
+    )
     res.starting_local_state = (wm, local_count)
     src_wm = _normalize_wm(src_wm)
     res.starting_source_state = (src_wm, src_count)
@@ -457,15 +453,8 @@ def do_delta_load(ctx: _Ctx, simple: bool = False, simple_check: bool = False) -
         # history-missing equals a sequential crash before step 2's
         # append: the unchanged index keeps the old watermark and the
         # next load re-extracts.
-        with ThreadPoolExecutor(max_workers=2) as pool:
-            f_hist = pool.submit(_step2_append, n1, mm)
-            f_pre = pool.submit(_finish_simple_prefix, ctx)
-            f_pre.result()
-            f_hist.result()
-        return _finish_simple(
-            ctx, res, src_count, simple_check, delta_rows=n1,
-            prefix_done=True,
-        )
+        overlap(lambda: _step2_append(n1, mm), lambda: _finish_simple_prefix(ctx))
+        return _finish_simple(ctx, res, src_count, simple_check, delta_rows=n1)
 
     # steps 1 and 2 touch disjoint tables (primary_keys_ts vs delta_1 +
     # history) and only step 3 reads both — overlap them (guide §2.6).
@@ -475,11 +464,7 @@ def do_delta_load(ctx: _Ctx, simple: bool = False, simple_check: bool = False) -
     # (_local_value_and_count reads the COMMITTED latest_pk_version, so
     # orphan staging rows are invisible until a later load re-indexes
     # them).
-    with ThreadPoolExecutor(max_workers=2) as pool:
-        f1 = pool.submit(_step1)
-        f2 = pool.submit(_step2_write)
-        f1.result()
-        n1, mm = f2.result()
+    _, (n1, mm) = overlap(_step1, _step2_write)
 
     # step 3 — strange updates (reference:db_to_delta.py:995-1184).
     # r14: the step-2 HISTORY append and the step-3 PROBE are also
@@ -489,19 +474,19 @@ def do_delta_load(ctx: _Ctx, simple: bool = False, simple_check: bool = False) -
     # append history themselves; _probe_additional_updates therefore
     # returns the decision without acting on it, and the branch work
     # (which must serialize after step 2's append for the +1µs ordering
-    # contract) runs after both futures complete. Crash interleavings:
+    # contract) runs after both steps complete. Crash interleavings:
     # history-appended-but-no-delta_2 equals a sequential crash inside
     # step 3; probe-done-but-history-missing equals a sequential crash
     # between steps 2 and 3 — both states the restore path already
     # tolerates.
     assert old_pk_version is not None
-    with ThreadPoolExecutor(max_workers=2) as pool:
-        f_hist = pool.submit(_step2_append, n1, mm)
-        f_probe = pool.submit(_probe_additional_updates, ctx, old_pk_version)
-        probe = f_probe.result()
-        f_hist.result()
-    new_wm = _act_additional_updates(ctx, probe)
-    delta_load_value = new_wm if new_wm is not None else delta_load_value
+    _, probe = overlap(
+        lambda: _step2_append(n1, mm),
+        lambda: _probe_additional_updates(ctx, old_pk_version),
+    )
+    if probe is not None:
+        new_wm = _handle_additional_updates(ctx, *probe)
+        delta_load_value = new_wm if new_wm is not None else delta_load_value
 
     # steps 3.5 (deletes) and 4 (current-rows index) are also
     # data-independent: the new index excludes deleted keys because the
@@ -524,11 +509,7 @@ def do_delta_load(ctx: _Ctx, simple: bool = False, simple_check: bool = False) -
         _, n = dest.latest_pk_version.write_counted(latest, mode="overwrite")
         return n
 
-    with ThreadPoolExecutor(max_workers=2) as pool:
-        f_del = pool.submit(_do_deletes, ctx, old_pk_version)
-        f4 = pool.submit(_step4)
-        f_del.result()
-        target_count = f4.result()
+    _, target_count = overlap(lambda: _do_deletes(ctx, old_pk_version), _step4)
 
     # reconcile (reference:db_to_delta.py:641-658) — the target count is
     # observed during the write itself, no second scan
@@ -566,16 +547,12 @@ def _finish_simple(
     src_count: int,
     simple_check: bool,
     delta_rows: Optional[int] = None,
-    prefix_done: bool = False,
 ) -> LoadResult:
-    """Simple-delta tail: merge delta_1 keys into latest_pk, drop the
-    snapshot, count-check, optionally escalate
-    (reference:odbc2deltalake/db_to_delta.py:659-691). ``prefix_done``:
-    the caller already ran _finish_simple_prefix (r14 overlap)."""
+    """Simple-delta tail after the caller ran _finish_simple_prefix:
+    merge delta_1 keys into latest_pk, count-check, optionally escalate
+    (reference:odbc2deltalake/db_to_delta.py:659-691)."""
     dest = ctx.dest
     assert ctx.delta_name is not None
-    if not prefix_done:
-        _finish_simple_prefix(ctx)
     merged = latest_pk_union(
         None,
         dest.delta_1.read(ctx.spark),
@@ -624,7 +601,9 @@ def _probe_additional_updates(ctx: _Ctx, old_pk_version: int):
     neither the history nor delta_1, so it is safe while step 2's
     history append is still in flight). Returns None when fully handled,
     else ``(additional, real_additional, update_count)`` for
-    ``_act_additional_updates`` to act on after the append completes."""
+    ``_handle_additional_updates``, which must run strictly after step
+    2's history append (its own appends carry the +1µs later stamp and
+    assume step 2's rows already landed)."""
     dest = ctx.dest
     assert ctx.delta_name is not None
     sel = ctx.pk_names + [ctx.delta_name]
@@ -644,16 +623,6 @@ def _probe_additional_updates(ctx: _Ctx, old_pk_version: int):
         dest.delta_2.write_empty(ctx.spark, dest.delta_1.schema())
         return None
     return additional, real_additional, update_count
-
-
-def _act_additional_updates(ctx: _Ctx, probe) -> Optional[Any]:
-    """Branch half of step 3 — runs strictly after step 2's history
-    append (its own appends carry the +1µs later stamp and assume step
-    2's rows already landed)."""
-    if probe is None:
-        return None
-    additional, real_additional, update_count = probe
-    return _handle_additional_updates(ctx, additional, real_additional, update_count)
 
 
 def _handle_additional_updates(
@@ -852,9 +821,11 @@ def read_current_rows(
     pre-r6 history) are conservatively kept. The min() probe itself
     reads only the keys-only index — control-plane cost.
 
-    ``.distinct()`` mirrors the documented W2 verification semantics:
-    the rewind path can append byte-identical (pk, ts) versions twice
-    (see tests/cdc_utils.py:current_rows).
+    The history can hold one unchanged version several times under
+    different ``__timestamp`` values: every ``force_full`` load and the
+    rewind path re-append rows the index still points at. The final
+    per-key dedupe keeps the copy with the greatest ``__timestamp``, the
+    row W1 ``latest_per_key`` returns.
     """
     dest = destination if isinstance(destination, DeltaDestination) else (
         DeltaDestination(destination)
@@ -881,9 +852,16 @@ def read_current_rows(
     cond = F.col(f"h.`{delta_col}`").eqNullSafe(F.col(f"l.`{delta_col}`"))
     for c in pk_cols:
         cond = cond & (F.col(f"h.`{c}`") == F.col(f"l.`{c}`"))
-    return (
+    cur = (
         hist.join(right, on=cond, how="inner")
         .select("h.*")
         .filter(~F.col(SYS.is_deleted))
-        .distinct()
+    )
+    latest = F.max_by(
+        F.struct(*[F.col(f"`{c}`") for c in cur.columns]), F.col(SYS.timestamp)
+    )
+    return (
+        cur.groupBy(*[F.col(f"`{c}`") for c in pk_cols])
+        .agg(latest.alias("r"))
+        .select("r.*")
     )

@@ -15,6 +15,7 @@ from pyspark.sql import functions as F
 from pyspark.sql import types as T
 from pyspark.sql import Window as W
 
+from odbc2deltalake_spark.functions.overlap import overlap
 from odbc2deltalake_spark.queries.registry import load_table, register
 
 # ---------------------------------------------------------------- W1 ----
@@ -1941,28 +1942,23 @@ def stream_cdc_full(spark: SparkSession, sf_dir: str) -> DataFrame:
         # r15 (guide §2.4+§2.6): the three assertion scalars were three
         # sequential jobs — the two tombstone counts now ride ONE
         # aggregate over the history scan, overlapped with the delta_2
-        # count (disjoint tables) from a 2-thread pool.
-        from concurrent.futures import ThreadPoolExecutor
-
+        # count (disjoint tables).
         hist = dest.delta.read(spark)
         tombs = hist.filter(F.col("__is_deleted"))
-        with ThreadPoolExecutor(max_workers=2) as pool:
-            f_d2 = pool.submit(dest.delta_2.read(spark).count)
-            f_tomb = pool.submit(
-                tombs.agg(
-                    F.count(F.lit(1)).alias("n"),
-                    F.sum(
-                        F.when(
-                            F.col("rv").isNotNull()
-                            | F.col("event_type").isNotNull()
-                            | F.col("value").isNotNull(),
-                            1,
-                        ).otherwise(0)
-                    ).alias("bad"),
-                ).first
-            )
-            got_strange = f_d2.result()
-            trow = f_tomb.result()
+        got_strange, trow = overlap(
+            dest.delta_2.read(spark).count,
+            tombs.agg(
+                F.count(F.lit(1)).alias("n"),
+                F.sum(
+                    F.when(
+                        F.col("rv").isNotNull()
+                        | F.col("event_type").isNotNull()
+                        | F.col("value").isNotNull(),
+                        1,
+                    ).otherwise(0)
+                ).alias("bad"),
+            ).first,
+        )
         assert got_strange == n_strange, (got_strange, n_strange)
         bad_tombs = int(trow["bad"] or 0)
         assert bad_tombs == 0, f"{bad_tombs} tombstones with non-NULL data"

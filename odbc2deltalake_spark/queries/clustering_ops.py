@@ -20,6 +20,7 @@ from __future__ import annotations
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
+from odbc2deltalake_spark.functions.overlap import overlap
 from odbc2deltalake_spark.operators.clustering import (
     fit_kmeans_centroids,
     kmeans_summary,
@@ -89,6 +90,16 @@ _PQ_QUERY_VEC = 0
 _PQ_TOPK = 10
 
 
+def _pq_meta(vectors: DataFrame) -> DataFrame:
+    """Corpus size and the query vector as one one-row aggregate."""
+    return vectors.agg(
+        F.count(F.lit(1)).alias("n"),
+        F.first(
+            F.when(F.col("vec_id") == _PQ_QUERY_VEC, F.col("v")), True
+        ).alias("qv"),
+    )
+
+
 # Exact-equivalence oracle shared by sim_ann_pq and sim_ann_opq: with a
 # full-slice exact rerank in the original metric the quantizer cannot
 # change the answer, so the top-10 equals brute-force squared L2 —
@@ -131,26 +142,16 @@ def sim_ann_pq(spark: SparkSession, sf_dir: str) -> DataFrame:
     vectors = _corpus(spark, sf_dir)
     # r14: corpus size and the query vector in ONE control-plane job
     # (was a count() job + a first() job — guide §2.4, fewer passes);
-    # wave 11: that job is data-independent of the codebook fit, so it
-    # rides the fit chain from a thread (guide §2.6) instead of
-    # serializing after it.
-    from concurrent.futures import ThreadPoolExecutor
-
-    with ThreadPoolExecutor(max_workers=1) as _pool:
-        _f_meta = _pool.submit(
-            vectors.agg(
-                F.count(F.lit(1)).alias("n"),
-                F.first(
-                    F.when(F.col("vec_id") == _PQ_QUERY_VEC, F.col("v")),
-                    True,
-                ).alias("qv"),
-            ).first
-        )
+    # wave 11: that job is data-independent of the codebook fit, so the
+    # two overlap (guide §2.6) instead of serializing.
+    def _fit():
         books = fit_pq_codebooks(vectors, _PQ_DIM, _PQ_M, _PQ_K, _PQ_ITERS)
         codes = encode_pq(vectors, _PQ_DIM, _PQ_M, books).localCheckpoint(
             eager=False
         )
-        meta = _f_meta.result()
+        return books, codes
+
+    meta, (books, codes) = overlap(_pq_meta(vectors).first, _fit)
     q, n = meta["qv"], meta["n"]
     return adc_topk(
         q,
@@ -201,27 +202,18 @@ def sim_ann_opq(spark: SparkSession, sf_dir: str) -> DataFrame:
     vectors = _corpus(spark, sf_dir)
     # r14: corpus size + query vector in one control-plane job (see
     # sim_ann_pq); wave 11: the job is data-independent of the
-    # rotation fit and the codebook fit, so it rides that chain from a
-    # thread (guide §2.6) — q is only consumed after the fit anyway.
-    from concurrent.futures import ThreadPoolExecutor
-
-    with ThreadPoolExecutor(max_workers=1) as _pool:
-        _f_meta = _pool.submit(
-            vectors.agg(
-                F.count(F.lit(1)).alias("n"),
-                F.first(
-                    F.when(F.col("vec_id") == _PQ_QUERY_VEC, F.col("v")),
-                    True,
-                ).alias("qv"),
-            ).first
-        )
+    # rotation fit and the codebook fit, so the two overlap (guide
+    # §2.6) — q is only consumed after the fit anyway.
+    def _fit():
         r = opq_rotation(vectors, "v", _PQ_DIM, _PQ_M)
         rot = rotate_vectors(vectors, "v", r).localCheckpoint(eager=False)
         books = fit_pq_codebooks(rot, _PQ_DIM, _PQ_M, _PQ_K, _PQ_ITERS)
         codes = encode_pq(rot, _PQ_DIM, _PQ_M, books).localCheckpoint(
             eager=False
         )
-        meta = _f_meta.result()
+        return r, books, codes
+
+    meta, (r, books, codes) = overlap(_pq_meta(vectors).first, _fit)
     q, n = meta["qv"], meta["n"]
     q_rot = [float(x) for x in (np.asarray(r) @ np.asarray(q))]
     return adc_topk(

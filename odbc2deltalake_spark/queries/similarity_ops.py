@@ -715,11 +715,11 @@ def corpus_semantic_decontaminate(spark: SparkSession, sf_dir: str) -> DataFrame
 # partition-pruned cell reads and the rerank join all execute, and the
 # final top-k must equal brute-force squared-L2 regardless of quantizer
 # quality. NOTE (ADVICE r13): since the r13 exact-mode skip, the ADC
-# LUT scoring branch does NOT run in this configuration — it is pinned
-# unit-test-only (tests/test_ivfpq.py: ADC == from-scratch numpy
-# residual distances; recall floors at the default nprobe), because ADC
-# distances are quantizer-dependent and no SQL oracle can recompute
-# them independently.
+# LUT scoring branch does NOT run in this configuration; the
+# sim_ann_ivfpq_adc row below runs it under the same oracle with a
+# bounded candidate cut, and tests/test_ivfpq.py pins ADC == from-scratch
+# numpy residual distances (ADC distances are quantizer-dependent, so no
+# SQL oracle can recompute them independently).
 
 _IVFPQ_ORACLE = f"""
 WITH q AS (
@@ -768,8 +768,8 @@ def sim_ann_ivfpq_search(spark: SparkSession, sf_dir: str) -> DataFrame:
     # re-scores it), so the in-query build uses seed-initialized cells
     # and codebooks — this row pins the PERSISTED-INDEX machinery
     # (partitioned cells, commit-logged tables, exact-mode search path;
-    # the bounded ADC branch is unit-test-only, see operators/ivfpq.py
-    # search() coverage note); trained quantizers with recall floors are
+    # the bounded ADC branch is oracle-checked by the sim_ann_ivfpq_adc
+    # row below); trained quantizers with recall floors are
     # pinned by tests/test_ivfpq.py and the sim_ann_opq row.
     # 51.2s -> ~12s at the sf0.1 sweep.
     ncent = max(4, min(int(n ** 0.5), 16))

@@ -11,6 +11,7 @@ from __future__ import annotations
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
+from odbc2deltalake_spark.functions.overlap import overlap
 from odbc2deltalake_spark.queries.registry import load_table, register
 
 # ------------------------------------------------------- token count ----
@@ -1211,13 +1212,7 @@ def hybrid_index_rrf(spark: SparkSession, sf_dir: str) -> DataFrame:
                 .alias("sem_rank"),
             )
 
-        from concurrent.futures import ThreadPoolExecutor
-
-        with ThreadPoolExecutor(max_workers=2) as pool:
-            f_lex = pool.submit(_lex_pipeline)
-            f_sem = pool.submit(_sem_pipeline)
-            lex_rank = f_lex.result()
-            sem_rank = f_sem.result()
+        lex_rank, sem_rank = overlap(_lex_pipeline, _sem_pipeline)
 
         contrib = F.coalesce(
             F.lit(1.0) / (F.lit(_RRF_K) + F.col("lex_rank")), F.lit(0.0)

@@ -440,13 +440,13 @@ def _merge_schemas(old: T.StructType, new: T.StructType) -> T.StructType:
 
 
 class TableStore(ABC):
-    """The exact table surface the engine uses — extracted so the
-    commit-log store here and a real Delta Lake store
-    (:class:`odbc2deltalake_spark.delta_store.DeltaTableStore`) are
-    drop-in interchangeable. Mirrors the reference's ``DeltaOps``
-    abstraction (reference:odbc2deltalake/reader/reader.py:13-32); the
-    plans layer (plans/destination.py, plans/db_to_delta.py) talks only to
-    this interface.
+    """The table surface the engine uses, mirroring the reference's
+    ``DeltaOps`` abstraction (reference:odbc2deltalake/reader/reader.py:13-32).
+    The load engine runs only on :class:`VersionedParquetTable`.
+    :class:`odbc2deltalake_spark.delta_store.DeltaTableStore` implements
+    the same interface as a standalone store that the engine does not
+    call; delta-spark is not a dependency, so no test or benchmark
+    executes it.
     """
 
     @abstractmethod

@@ -90,7 +90,5 @@ def current_rows(spark, dest):
     cur = read_current_rows(spark, dest, ["User_-_iD"], "time_stamp")
     return sorted(
         tuple(r)
-        for r in cur.select("User_-_iD", "FirstName", "LastName", "Age")
-        .distinct()
-        .collect()
+        for r in cur.select("User_-_iD", "FirstName", "LastName", "Age").collect()
     )

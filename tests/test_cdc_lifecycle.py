@@ -59,6 +59,25 @@ def test_first_full_load(spark, dest):
     assert not (dest / "meta" / "lock.txt").exists()
 
 
+def test_force_full_reload_reads_one_current_row_per_key(spark, dest):
+    """A force_full load re-appends every unchanged row under a new
+    __timestamp; the current-rows read returns each key once, as the
+    copy from the latest load."""
+    from odbc2deltalake_spark.plans.db_to_delta import read_current_rows
+
+    src = make_source(spark)
+    run_load(spark, src, dest)
+    run_load(spark, src, dest, WriteConfig(load_mode="force_full"))
+    hist = DeltaDestination(dest).delta.read(spark)
+    assert hist.count() == 2 * len(ROWS_V1)
+    last_ts = hist.agg(F.max("__timestamp")).first()[0]
+
+    cur = read_current_rows(spark, dest, ["User_-_iD"], "time_stamp").collect()
+    assert sorted(r["User_-_iD"] for r in cur) == [1, 2, 3]
+    assert {r["__timestamp"] for r in cur} == {last_ts}
+    assert len(current_rows(spark, dest)) == len(ROWS_V1)
+
+
 # -------------------------------------------- test_02: no pks => full loads --
 
 

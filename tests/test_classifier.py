@@ -196,14 +196,22 @@ def test_score_documents_streams(spark, fixture, tmp_path):
     assert got == want
 
 
-def test_driver_fast_path_matches_distributed_loop(fixture):
+@pytest.mark.parametrize("optimizer", ["gd", "adagrad"])
+@pytest.mark.parametrize("tol", [0.0, 0.12])
+def test_driver_fast_path_matches_distributed_loop(fixture, optimizer, tol):
     """r15 driver fast path (bounded collect + vectorized trajectory)
     must reproduce the distributed loop's weights: driver_cell_cap=0
-    pins the loop, the default cap takes the fast path on this fixture."""
-    features, weights_fast, _, _ = fixture  # default cap -> fast path
-    weights_loop = fit_logreg(
-        features, D, steps=STEPS, lr=LR, optimizer=OPT, driver_cell_cap=0
+    pins the loop, the default cap takes the fast path on this fixture.
+    One extra row has NULL feats: the loop's explode drops it from the
+    gradient while it still counts in n, and the fast path must agree."""
+    features, _, _, _ = fixture
+    null_row = features.limit(1).withColumn(
+        "feats", F.lit(None).cast(features.schema["feats"].dataType)
     )
+    with_null = features.unionByName(null_row)
+    kw = dict(steps=STEPS, lr=LR, tol=tol, optimizer=optimizer)
+    weights_fast = fit_logreg(with_null, D, **kw)  # default cap -> fast path
+    weights_loop = fit_logreg(with_null, D, driver_cell_cap=0, **kw)
     for got, want in zip(weights_fast, weights_loop):
         assert got == pytest.approx(want, abs=1e-9)
 

@@ -18,7 +18,8 @@ Steps, in order, fail-fast:
    (VERDICT r11 #7).
 3. Untracked round artifacts (CORRECTNESS/BENCH jsons) are listed as
    MUST-COMMIT.
-4. --full: also run the ledger test file and the overflow oracle gate.
+4. --full: also run the ledger test file, the overflow oracle gate and
+   the deferred slow test set (`pytest tests/ -m slow`).
 """
 
 from __future__ import annotations
@@ -524,6 +525,14 @@ def main() -> int:
              "tests/test_correctness_extras.py", "-q"],
             cwd=REPO,
         )
+        rc = rc or r.returncode
+        # the deferred slow set (pytest.ini) runs nowhere else
+        r = subprocess.run(
+            [sys.executable, "-m", "pytest", "tests/", "-m", "slow", "-q"],
+            cwd=REPO,
+        )
+        if r.returncode:
+            print(f"SLOW-SET: pytest -m slow exited {r.returncode}")
         rc = rc or r.returncode
     print("round_close:", "CLEAN" if rc == 0 else "ACTION REQUIRED")
     return rc
