@@ -6,8 +6,7 @@ bmsuisse/odbc2deltalake (the reference), re-expressed Spark-first:
 - DataFrame / Spark SQL declarative plans (Catalyst optimizes; no SQL
   string generation for local operations).
 - A versioned Parquet table store (commit log + time travel + MERGE)
-  standing in for Delta Lake where delta-spark is unavailable; the same
-  writer API binds to Delta when the jars are present.
+  standing in for Delta Lake, which is not a dependency.
 - SCD2 history maintenance: full loads, incremental delta loads driven by
   a monotonic delta column, delete detection via key-set EXCEPT, "strange"
   (timestamp-inconsistent) update repair, and a `latest_pk_version`
@@ -24,7 +23,6 @@ from odbc2deltalake_spark.tablestore import (
     ChangeFeedTruncatedError,
     CommitConflictError,
     SchemaDriftError,
-    TableStore,
     VersionedParquetTable,
 )
 from odbc2deltalake_spark.sources import DataFrameSource, ParquetTableSource, Source
@@ -51,7 +49,6 @@ __all__ = [
     "WriteConfig",
     "WriteConfigAndInfos",
     "get_spark",
-    "TableStore",
     "VersionedParquetTable",
     "CommitConflictError",
     "ChangeFeedTruncatedError",

@@ -119,10 +119,6 @@ def should_trim(col: ColInfo) -> bool:
     return base not in NO_TRIM_TYPES
 
 
-def cols_to_schema(cols: list[ColInfo]) -> T.StructType:
-    return T.StructType([c.field() for c in cols])
-
-
 @dataclass(frozen=True)
 class SystemCols:
     """The three SCD2 system columns

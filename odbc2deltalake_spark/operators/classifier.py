@@ -151,18 +151,35 @@ _ADAGRAD_EPS = 1e-8
 _FIT_DRIVER_CELL_CAP = 4_000_000
 
 
+def _optimizer_step(w, gsq, g, n: int, lr: float, optimizer: str) -> float:
+    """One gd/adagrad update of the numpy weights ``w`` (and the adagrad
+    accumulator ``gsq``), in place, from the dense full-batch gradient
+    ``g``. A coordinate with ``g == 0`` stays unchanged. Returns the
+    early-stop norm ||g||_2 / n."""
+    import numpy as np
+
+    if optimizer == "adagrad":
+        gi = g / n
+        gsq += gi * gi
+        w -= lr * gi / (np.sqrt(gsq) + _ADAGRAD_EPS)
+    else:
+        w -= lr * g / n
+    return float(np.sqrt((g * g).sum())) / n
+
+
 def _fit_logreg_driver(
     rows, n_buckets: int, steps: int, lr: float, tol: float, optimizer: str,
     n: int,
 ) -> list[float]:
     """Vectorized driver-side trajectory over collected sparse features.
 
-    Same math as the distributed loop, same update code shape: the
-    per-bucket gradient is a sum of c*r terms (bincount — double
-    precision over <= cap addends, within ~1e-12 of any summation
-    order; the repo pins fit_logreg against the independently-ordered
-    numpy reference_fit at 1e-9, so summation-order robustness at this
-    tolerance is an existing, tested property of the fit).
+    Same math as the distributed loop, and the same
+    :func:`_optimizer_step`: the per-bucket gradient is a sum of c*r
+    terms (bincount — double precision over <= cap addends, within
+    ~1e-12 of any summation order; the repo pins fit_logreg against the
+    independently-ordered numpy reference_fit at 1e-9, so
+    summation-order robustness at this tolerance is an existing, tested
+    property of the fit).
 
     A row with NULL ``feats`` contributes no gradient term but still
     counts in ``n``, as in the loop, where explode drops it."""
@@ -189,13 +206,8 @@ def _fit_logreg_driver(
         np.add.at(m, row_idx, c_val * w[b_idx])
         r = 1.0 / (1.0 + np.exp(-m)) - y
         g = np.bincount(b_idx, weights=c_val * r[row_idx], minlength=d)
-        if optimizer == "adagrad":
-            gi = g / n
-            gsq += gi * gi
-            w -= lr * gi / (np.sqrt(gsq) + _ADAGRAD_EPS)
-        else:
-            w -= lr * g / n
-        if tol > 0.0 and float(np.sqrt((g * g).sum())) / n < tol:
+        gnorm = _optimizer_step(w, gsq, g, n, lr, optimizer)
+        if tol > 0.0 and gnorm < tol:
             break
     return [float(x) for x in w]
 
@@ -253,13 +265,15 @@ def fit_logreg(
         return _fit_logreg_driver(
             rows, n_buckets, steps, lr, tol, optimizer, n
         )
-    w = [0.0] * (n_buckets + 3)  # D hashed + log-len + alpha + bias
-    gsq = [0.0] * (n_buckets + 3)  # adagrad accumulator
+    import numpy as np
+
+    w = np.zeros(n_buckets + 3)  # D hashed + log-len + alpha + bias
+    gsq = np.zeros(n_buckets + 3)  # adagrad accumulator
     for _ in range(steps):
         resid = features.select(
             "feats",
             (
-                F.lit(1.0) / (F.lit(1.0) + F.exp(-_margin(w)))
+                F.lit(1.0) / (F.lit(1.0) + F.exp(-_margin(w.tolist())))
                 - F.col("label").cast("double")
             ).alias("r"),
         )
@@ -269,21 +283,13 @@ def fit_logreg(
             .agg(F.sum(F.col("s.c") * F.col("r")).alias("g"))
             .collect()
         )
-        if optimizer == "adagrad":
-            for row in grad_rows:
-                gi = row["g"] / n
-                gsq[row["b"]] += gi * gi
-                w[row["b"]] -= lr * gi / (
-                    math.sqrt(gsq[row["b"]]) + _ADAGRAD_EPS
-                )
-        else:
-            for row in grad_rows:
-                w[row["b"]] -= lr * row["g"] / n
-        if tol > 0.0:
-            gnorm = math.sqrt(sum(row["g"] ** 2 for row in grad_rows)) / n
-            if gnorm < tol:
-                break
-    return w
+        g = np.zeros(n_buckets + 3)
+        for row in grad_rows:
+            g[row["b"]] = row["g"]
+        gnorm = _optimizer_step(w, gsq, g, n, lr, optimizer)
+        if tol > 0.0 and gnorm < tol:
+            break
+    return w.tolist()
 
 
 def predict(features: DataFrame, weights: list[float]) -> DataFrame:

@@ -41,10 +41,7 @@ class LockHeldError(Exception):
 
 class DeltaDestination:
     """Destination layout; every table is a commit-log parquet
-    :class:`VersionedParquetTable`. ``DeltaTableStore``
-    (odbc2deltalake_spark/delta_store.py) is a standalone store that the
-    load engine never calls; delta-spark is not a dependency, so no test
-    or benchmark executes it."""
+    :class:`VersionedParquetTable`."""
 
     def __init__(self, root: str | Path):
         self.root = Path(root)

@@ -16,6 +16,11 @@ from pyspark.sql import types as T
 from pyspark.sql import Window as W
 
 from odbc2deltalake_spark.functions.overlap import overlap
+from odbc2deltalake_spark.operators.scd2 import (
+    deletes_keys,
+    latest_per_key,
+    latest_pk_union,
+)
 from odbc2deltalake_spark.queries.registry import load_table, register
 
 # ---------------------------------------------------------------- W1 ----
@@ -41,11 +46,8 @@ def w1_latest_per_key(spark: SparkSession, sf_dir: str) -> DataFrame:
     Scale: one shuffle on the pk; at 100 TB this is the unavoidable
     repartition-by-key, and AQE handles skewed keys."""
     ev = load_table(spark, sf_dir, "events")
-    w = W.partitionBy("user_id").orderBy(F.col("ts").desc(), F.col("event_id").desc())
-    return (
-        ev.withColumn("rn", F.row_number().over(w))
-        .filter(F.col("rn") == 1)
-        .select("user_id", "ts", "event_type", F.round("value", 2).alias("value"))
+    return latest_per_key(ev, ["user_id"], "ts", tiebreak=["event_id"]).select(
+        "user_id", "ts", "event_type", F.round("value", 2).alias("value")
     )
 
 
@@ -168,39 +170,36 @@ def u1_latest_pk_union(spark: SparkSession, sf_dir: str) -> DataFrame:
     def max_ts(df: DataFrame) -> DataFrame:
         return df.groupBy("user_id").agg(F.max("ts").alias("ts"))
 
-    delta_2 = max_ts(ev.filter(F.col("event_type") == "error"))
-    delta_1 = max_ts(ev.filter(F.col("event_type") == "purchase"))
-    pk_ts = max_ts(ev)
-    d2_keys = delta_2.select("user_id")
-    d1_keys = delta_1.select("user_id")
-    return delta_2.unionByName(
-        delta_1.join(d2_keys, on="user_id", how="left_anti")
-    ).unionByName(
-        pk_ts.join(d2_keys, on="user_id", how="left_anti").join(
-            d1_keys, on="user_id", how="left_anti"
-        )
+    return latest_pk_union(
+        max_ts(ev.filter(F.col("event_type") == "error")),
+        max_ts(ev.filter(F.col("event_type") == "purchase")),
+        max_ts(ev),
+        ["user_id"],
+        "ts",
     )
 
 
 # ---------------------------------------------------------------- U2 ----
 
 _U2_ORACLE = """
-SELECT user_id FROM events WHERE ts < TIMESTAMP '2024-01-16 00:00:00'
+SELECT user_id FROM events WHERE ts < TIMESTAMP '2024-01-30 00:00:00'
 EXCEPT
-SELECT user_id FROM events WHERE ts >= TIMESTAMP '2024-01-16 00:00:00'
+SELECT user_id FROM events WHERE ts >= TIMESTAMP '2024-01-30 00:00:00'
 """
 
 
 @register("u2_except_deletes", _U2_ORACLE, tags=("cdc", "setop"))
 def u2_except_deletes(spark: SparkSession, sf_dir: str) -> DataFrame:
     """U2: delete detection — old key set EXCEPT current key set
-    (reference:odbc2deltalake/db_to_delta.py:773-792). Spark `subtract`
-    is EXCEPT DISTINCT, matching the reference's set semantics."""
+    (reference:odbc2deltalake/db_to_delta.py:773-792), matching the
+    reference's EXCEPT DISTINCT set semantics. The cutoff sits late in
+    the fixture's time range: at mid-month every user still has events
+    after it, so the result was empty and the check could not fail."""
     ev = load_table(spark, sf_dir, "events")
-    mid = F.lit("2024-01-16 00:00:00").cast("timestamp")
-    old = ev.filter(F.col("ts") < mid).select("user_id")
-    cur = ev.filter(F.col("ts") >= mid).select("user_id")
-    return old.subtract(cur)
+    cut = F.lit("2024-01-30 00:00:00").cast("timestamp")
+    return deletes_keys(
+        ev.filter(F.col("ts") < cut), ev.filter(F.col("ts") >= cut), ["user_id"]
+    )
 
 
 # ------------------------------------------------------------- P2/P1 ----
@@ -402,10 +401,9 @@ def scd2_current_rows(spark: SparkSession, sf_dir: str) -> DataFrame:
     the whole engine (reference:odbc2deltalake/write_utils/restore_pk.py:97-118
     + consistency.py:17-56)."""
     ev = load_table(spark, sf_dir, "events")
-    w = W.partitionBy("user_id").orderBy(F.col("ts").desc(), F.col("event_id").desc())
     return (
-        ev.withColumn("rn", F.row_number().over(w))
-        .filter((F.col("rn") == 1) & (F.col("event_type") != "error"))
+        latest_per_key(ev, ["user_id"], "ts", tiebreak=["event_id"])
+        .filter(F.col("event_type") != "error")
         .select("user_id", "ts", F.round("value", 2).alias("value"))
     )
 
@@ -1538,9 +1536,8 @@ def store_shallow_clone_divergence(spark: SparkSession, sf_dir: str) -> DataFram
 # violating batch REFUSES atomically (no partial rows), the structured
 # read-back returns the conjuncts, and the surviving table equals the
 # plain SQL filter. Delta's ADD CONSTRAINT semantics
-# (delta.constraints.* — DeltaTableStore translates both directions,
-# delta_store.py:check_constraints); the reference relies on Delta's
-# runtime for this, so the engine's own store must carry it natively.
+# (delta.constraints.*); the reference relies on Delta's runtime for
+# this, so the engine's own store must carry it natively.
 
 _CHECK_GATE_ORACLE = """
 SELECT doc_id, lang, source, n_chars
@@ -1562,9 +1559,8 @@ def store_check_constraint_gate(spark: SparkSession, sf_dir: str) -> DataFrame:
     appends the rest of the valid rows THROUGH enforcement, then
     asserts in-query that (a) a violating batch refuses atomically —
     rows and version both untouched, (b) the structured read-back
-    returns the exact conjuncts (the same surface DeltaTableStore
-    round-trips via delta.constraints.*). Only then is the table
-    hashed against the oracle."""
+    returns the exact conjuncts. Only then is the table hashed
+    against the oracle."""
     import shutil
     import tempfile
 

@@ -15,6 +15,10 @@ from typing import Callable, Optional
 
 from pyspark.sql import DataFrame, SparkSession
 
+# The driver's correctness harness enumerates only the first DRIVER_WINDOW
+# ``queries()`` entries (see ``register``).
+DRIVER_WINDOW = 50
+
 TABLE_NAMES = [
     "region",
     "nation",

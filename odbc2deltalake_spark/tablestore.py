@@ -435,189 +435,6 @@ def _merge_schemas(old: T.StructType, new: T.StructType) -> T.StructType:
 
 
 # ------------------------------------------------------------------------
-# table-store interface
-# ------------------------------------------------------------------------
-
-
-class TableStore(ABC):
-    """The table surface the engine uses, mirroring the reference's
-    ``DeltaOps`` abstraction (reference:odbc2deltalake/reader/reader.py:13-32).
-    The load engine runs only on :class:`VersionedParquetTable`.
-    :class:`odbc2deltalake_spark.delta_store.DeltaTableStore` implements
-    the same interface as a standalone store that the engine does not
-    call; delta-spark is not a dependency, so no test or benchmark
-    executes it.
-    """
-
-    @abstractmethod
-    def exists(self) -> bool: ...
-
-    @abstractmethod
-    def version(self) -> int:
-        """Latest committed version number."""
-
-    @abstractmethod
-    def schema(self, version: Optional[int] = None) -> T.StructType: ...
-
-    @abstractmethod
-    def read(
-        self,
-        spark: SparkSession,
-        version: Optional[int] = None,
-        buckets: Optional[Iterable[int]] = None,
-        skip_where: Optional[tuple[str, str, Any] | list[tuple[str, str, Any]]] = None,
-    ) -> DataFrame:
-        """Snapshot read, optionally time-traveled to ``version``.
-        ``buckets`` is an optional file-pruning hint; stores without
-        bucket layout may ignore it (correctness never depends on it).
-        ``skip_where=(col, op, value)`` is a pruning hint + residual
-        filter: implementations MUST at minimum apply the predicate
-        (results equal an unpruned filter) and MAY use recorded stats
-        to skip files — the engine passes it on every store, so it is
-        part of the interface contract, not an extension."""
-
-    @abstractmethod
-    def write(
-        self,
-        df: DataFrame,
-        mode: str = "append",
-        merge_schema: bool = False,
-        overwrite_schema: bool = False,
-        partition_by: Optional[list[str]] = None,
-        extra_commit_fields: Optional[dict[str, Any]] = None,
-        stats_cols: Optional[list[str]] = None,
-        per_file_stats: bool = False,
-        known_stats: Optional[dict[str, tuple[Any, Any]]] = None,
-        txn: Optional[tuple[str, int]] = None,
-        bloom_cols: Optional[list[str]] = None,
-        bloom_bits: Optional[int] = None,  # None = auto-size from rows/file
-        identity_col: Optional[str] = None,
-    ) -> int:
-        """Write one commit. The stats/commit-field parameters are
-        data-skipping and audit metadata hints: a store without its own
-        stats machinery MUST accept and may ignore them (Delta collects
-        native file stats, so its implementation treats them as no-ops);
-        ignoring ``skip_where``'s pruning half is always safe because
-        the read applies the residual predicate.
-
-        ``txn=(app_id, version)`` requests idempotent-writer semantics
-        (Delta's ``txnAppId``/``txnVersion``): the write is SKIPPED when
-        the table already records that app at or past that version."""
-
-    @abstractmethod
-    def write_empty(self, spark: SparkSession, schema: T.StructType) -> int: ...
-
-    @abstractmethod
-    def restore(self, version: int) -> int: ...
-
-    @abstractmethod
-    def set_properties(self, props: dict[str, str]) -> int: ...
-
-    @abstractmethod
-    def get_property(self, name: str) -> Optional[str]: ...
-
-    @abstractmethod
-    def vacuum(self, retain_versions: int = 1, **kwargs: Any) -> list[str]: ...
-
-    @abstractmethod
-    def delete_table(self) -> None: ...
-
-    @abstractmethod
-    def delete_where(
-        self,
-        spark: SparkSession,
-        predicate: tuple[str, str, Any] | list[tuple[str, str, Any]],
-        stats_cols: Optional[list[str]] = None,
-    ) -> dict[str, Any]:
-        """Merge-on-write DELETE: remove rows matching the predicate
-        (one (col, op, value) or a list ANDed), rewriting only affected
-        files. SQL semantics — a NULL predicate keeps the row. Returns
-        {version, rows_deleted, ...}; a zero-match delete MUST NOT
-        commit. ``stats_cols`` is a skipping hint stores may ignore."""
-
-    @abstractmethod
-    def update_where(
-        self,
-        spark: SparkSession,
-        set_exprs: dict[str, Any],
-        predicate: tuple[str, str, Any] | list[tuple[str, str, Any]],
-        stats_cols: Optional[list[str]] = None,
-    ) -> dict[str, Any]:
-        """Merge-on-write UPDATE: apply ``set_exprs`` (col → SQL
-        expression or Column) to rows matching the predicate. Returns
-        {version, rows_updated, ...}; zero-match MUST NOT commit."""
-
-    @abstractmethod
-    def merge_upsert(
-        self,
-        spark: SparkSession,
-        source: DataFrame,
-        key_cols: list[str],
-        num_buckets: Optional[int] = None,
-        target_bucket_rows: Optional[int] = None,
-        extra_commit_fields: Optional[dict[str, Any]] = None,
-    ) -> int:
-        """Upsert on key equality (whenMatchedUpdateAll /
-        whenNotMatchedInsertAll). Bucketing params are physical-layout
-        hints for stores that implement their own file pruning.
-        ``extra_commit_fields`` ride the SAME commit as the merged data
-        where the store's log supports it (``set_props`` entries become
-        atomically-applied table properties — the Delta txnAppId/
-        txnVersion pattern for exactly-once writers)."""
-
-    def write_counted(
-        self,
-        df: DataFrame,
-        mode: str = "append",
-        merge_schema: bool = False,
-    ) -> tuple[int, int]:
-        """Write and return (version, rows_written) in ONE pass: an
-        Observation on the write plan counts rows as they stream out — no
-        separate count job over the written table."""
-        v, n, _ = self.write_counted_minmax(
-            df, [], mode=mode, merge_schema=merge_schema
-        )
-        return v, n
-
-    def write_counted_minmax(
-        self,
-        df: DataFrame,
-        minmax_cols: list[str],
-        mode: str = "append",
-        merge_schema: bool = False,
-    ) -> tuple[int, int, dict[str, tuple[Any, Any]]]:
-        """Like :meth:`write_counted`, additionally returning exact
-        {col: (min, max)} for ``minmax_cols`` — the aggregates ride the
-        SAME Observation as the row count, so the bounds cost zero extra
-        passes (unlike attaching a fresh CollectMetrics to a later
-        write, which the A/B in :meth:`VersionedParquetTable.write`'s
-        docstring measured at ~1.2s/load). The SCD2 engine uses this on
-        its change-set writes and feeds the bounds forward as
-        ``known_stats`` on the history append."""
-        from pyspark.sql import Observation
-
-        cols = [c for c in minmax_cols if c in df.columns]
-        obs = Observation()
-        aggs = [F.count(F.lit(1)).alias("rows")]
-        for c in cols:
-            aggs.append(F.min(c).alias(f"__mn_{c}"))
-            aggs.append(F.max(c).alias(f"__mx_{c}"))
-        df = df.observe(obs, *aggs)
-        v = self.write(df, mode=mode, merge_schema=merge_schema)
-        vals = obs.get
-        return (
-            v,
-            int(vals["rows"]),
-            {c: (vals[f"__mn_{c}"], vals[f"__mx_{c}"]) for c in cols},
-        )
-
-    def count_rows(self, spark: SparkSession) -> int:
-        """Current row count. Stores that track counts in commit metadata
-        override this to answer without a scan."""
-        return self.read(spark).count()
-
-
-# ------------------------------------------------------------------------
 # table
 # ------------------------------------------------------------------------
 
@@ -651,7 +468,7 @@ def _relax_nullability(dt: T.DataType) -> T.DataType:
     return dt
 
 
-class VersionedParquetTable(TableStore):
+class VersionedParquetTable:
     def __init__(self, root: str | Path, backend: Optional[StorageBackend] = None):
         self.root = Path(root) if not isinstance(root, Path) else root
         self._root_str = str(root)
@@ -2352,6 +2169,52 @@ class VersionedParquetTable(TableStore):
             }
         return out
 
+    def write_counted(
+        self,
+        df: DataFrame,
+        mode: str = "append",
+        merge_schema: bool = False,
+    ) -> tuple[int, int]:
+        """Write and return (version, rows_written) in ONE pass: an
+        Observation on the write plan counts rows as they stream out — no
+        separate count job over the written table."""
+        v, n, _ = self.write_counted_minmax(
+            df, [], mode=mode, merge_schema=merge_schema
+        )
+        return v, n
+
+    def write_counted_minmax(
+        self,
+        df: DataFrame,
+        minmax_cols: list[str],
+        mode: str = "append",
+        merge_schema: bool = False,
+    ) -> tuple[int, int, dict[str, tuple[Any, Any]]]:
+        """Like :meth:`write_counted`, additionally returning exact
+        {col: (min, max)} for ``minmax_cols`` — the aggregates ride the
+        SAME Observation as the row count, so the bounds cost zero extra
+        passes (unlike attaching a fresh CollectMetrics to a later
+        write, which the A/B in :meth:`VersionedParquetTable.write`'s
+        docstring measured at ~1.2s/load). The SCD2 engine uses this on
+        its change-set writes and feeds the bounds forward as
+        ``known_stats`` on the history append."""
+        from pyspark.sql import Observation
+
+        cols = [c for c in minmax_cols if c in df.columns]
+        obs = Observation()
+        aggs = [F.count(F.lit(1)).alias("rows")]
+        for c in cols:
+            aggs.append(F.min(c).alias(f"__mn_{c}"))
+            aggs.append(F.max(c).alias(f"__mx_{c}"))
+        df = df.observe(obs, *aggs)
+        v = self.write(df, mode=mode, merge_schema=merge_schema)
+        vals = obs.get
+        return (
+            v,
+            int(vals["rows"]),
+            {c: (vals[f"__mn_{c}"], vals[f"__mx_{c}"]) for c in cols},
+        )
+
     # ---------- bloom-filter data skipping ----------
 
     BLOOM_K = 3  # probes per value (Kirsch-Mitzenmacher double hashing)
@@ -2578,15 +2441,6 @@ class VersionedParquetTable(TableStore):
             ).collect()
         }
         return [got[i] for i in range(len(values))]
-
-    @staticmethod
-    def _bloom_hash_value(
-        spark: SparkSession, value: Any, type_json: str
-    ) -> int:
-        """Single-value convenience over :meth:`_bloom_hash_values`."""
-        return VersionedParquetTable._bloom_hash_values(
-            spark, [value], type_json
-        )[0]
 
     @staticmethod
     def _bloom_may_contain(b64: str, m: int, k: int, h: int) -> bool:
@@ -3368,9 +3222,9 @@ class VersionedParquetTable(TableStore):
         The append-only history table accumulates one dir of
         shuffle-partition-count files per load; at 100 TB that is the
         small-files problem (task-per-file scheduling, metadata-bound
-        scans). Output file count is sized from the backend's byte count
-        of the live dirs (``du``; falls back to ``out_partitions``,
-        then to the session's default parallelism). ``zorder_by``
+        scans). Output file count is ``out_partitions`` when given, else
+        sized from the backend's byte count of the live dirs (``du``;
+        falls back to the session's default parallelism). ``zorder_by``
         applies `operators.zorder.zorder_layout` to the rewrite so the
         compacted files also carry multi-dimensional clustering —
         Delta's OPTIMIZE ZORDER BY pairing.
@@ -3417,26 +3271,10 @@ class VersionedParquetTable(TableStore):
                     for c in ((d.get("bloom") or {}).get("types") or {})
                 }
             )
-        snapshot = self.read(spark)
-        n = out_partitions
-        if n is None:
-            # size from the LIVE dirs only — a whole-root du counts dead
-            # generations (pre-vacuum) and the commit log, inflating the
-            # output file count a little more with every compaction and
-            # recreating the small-files problem compact exists to fix
-            total = 0
-            for d in st["dirs"]:
-                total += self.backend.du(self._path(d["dir"])) or 0
-            if total:
-                n = max(1, min(total // max(1, target_file_bytes), 4096))
-        if n is None:
-            n = spark.sparkContext.defaultParallelism
-        if zorder_by:
-            from odbc2deltalake_spark.operators.zorder import zorder_layout
-
-            compacted = zorder_layout(snapshot, zorder_by, out_partitions=n)
-        else:
-            compacted = snapshot.coalesce(n)
+        compacted = self._compact_layout(
+            spark, self.read(spark), st["dirs"], target_file_bytes,
+            zorder_by, out_partitions,
+        )
         # a Z-ordered rewrite lays rows out so per-file [min, max]
         # intervals on the cluster keys are TIGHT — recording them makes
         # skip_where reads prune inside the compacted commit (default:
@@ -3456,6 +3294,45 @@ class VersionedParquetTable(TableStore):
                 "zorder_by": zorder_by or [],
             },
         )
+
+    def _compact_layout(
+        self,
+        spark: SparkSession,
+        df: DataFrame,
+        dirs: list[dict[str, Any]],
+        target_file_bytes: int,
+        zorder_by: Optional[list[str]],
+        out_partitions: Optional[int],
+    ) -> DataFrame:
+        """Size and lay out a compaction rewrite of ``dirs``.
+
+        An explicit ``out_partitions`` is honoured: a scan of tiny
+        files packs into fewer splits than asked for, and ``coalesce``
+        cannot raise that count, so the input is spread first. The
+        derived sizes (``du`` of the rewritten dirs, else the default
+        parallelism) stay on plain ``coalesce``, so compaction never
+        raises the file count by itself."""
+        n = out_partitions
+        if n is None:
+            # size from the rewritten LIVE dirs only — a whole-root du
+            # counts dead generations (pre-vacuum) and the commit log,
+            # inflating the output file count a little more with every
+            # compaction and recreating the small-files problem compact
+            # exists to fix
+            total = sum(self.backend.du(self._path(d["dir"])) or 0 for d in dirs)
+            if total:
+                n = max(1, min(total // max(1, target_file_bytes), 4096))
+        if n is None:
+            n = spark.sparkContext.defaultParallelism
+        if zorder_by:
+            from odbc2deltalake_spark.operators.zorder import zorder_layout
+
+            return zorder_layout(df, zorder_by, out_partitions=n)
+        if out_partitions is not None:
+            from odbc2deltalake_spark.functions.spread import spread_small_scan
+
+            df = spread_small_scan(df, n)
+        return df.coalesce(n)
 
     def _compact_partial(
         self,
@@ -3518,21 +3395,9 @@ class VersionedParquetTable(TableStore):
         src = parts[0]
         for p in parts[1:]:
             src = src.unionByName(p)
-        n = out_partitions
-        if n is None:
-            total = sum(
-                self.backend.du(self._path(d["dir"])) or 0 for d in affected
-            )
-            if total:
-                n = max(1, min(total // max(1, target_file_bytes), 4096))
-        if n is None:
-            n = spark.sparkContext.defaultParallelism
-        if zorder_by:
-            from odbc2deltalake_spark.operators.zorder import zorder_layout
-
-            src = zorder_layout(src, zorder_by, out_partitions=n)
-        else:
-            src = src.coalesce(n)
+        src = self._compact_layout(
+            spark, src, affected, target_file_bytes, zorder_by, out_partitions
+        )
         if stats_cols is None:
             sc = {c for c, _, _ in conj} | set(zorder_by or [])
             for d in affected:

@@ -36,8 +36,8 @@ def test_core_set_fits_driver_cap():
     """Every §2 / LLM-pipeline operator must sit inside the driver's
     50-entry enumeration window; overflow entries sort strictly after."""
     specs = registry.ordered_specs()
-    assert len([s for s in specs if s.priority == 0]) <= 50
-    core_names = [s.name for s in specs[:50]]
+    assert len([s for s in specs if s.priority == 0]) <= registry.DRIVER_WINDOW
+    core_names = [s.name for s in specs[: registry.DRIVER_WINDOW]]
     # the r4 core set stays enumerable — spot anchors, including the six
     # operators rotated in from overflow in r4
     for name in ("q1_pricing_summary", "ev_sessionize",

@@ -440,7 +440,7 @@ def main() -> int:
 
     # 3b. evicted-row verification (VERDICT r14 #7): every query that was
     # green in the LATEST driver CORRECTNESS round but now sits OUTSIDE
-    # the 50-entry window (i.e. evicted by a rotation this round) gets
+    # the driver window (i.e. evicted by a rotation this round) gets
     # one committed sf0.01 comparator run, so "still green after
     # eviction" is an in-tree artifact rather than the builder's word.
     # Runs Spark only under --full/--sf01; plain mode audits the file.
@@ -451,11 +451,15 @@ def main() -> int:
     )
     if corr:
         from odbc2deltalake_spark.queries import registry as _reg2
+        from tools.rotation_ledger import _is_green
 
         _reg2.load_all()
-        window_now = {s.name for s in _reg2.ordered_specs()[:50]}
+        window_now = {
+            s.name for s in _reg2.ordered_specs()[: _reg2.DRIVER_WINDOW]
+        }
         last_round = json.loads(corr[-1].read_text())
-        evicted = sorted(set(last_round) - window_now)
+        green = {n for n, row in last_round.items() if _is_green(row)}
+        evicted = sorted(green - window_now)
         if evicted and ("--full" in sys.argv or "--sf01" in sys.argv):
             r = subprocess.run(
                 [sys.executable, "tools/check_correctness.py",
